@@ -14,6 +14,11 @@ docs/s per worker.
 Usage:
     python bench.py                 # one JSON line on stdout
     SPARK_GRAFT_CPUS=8 python bench.py
+
+``$SPARK_GRAFT_CPUS`` defaults to the CPUs this process may run on. The
+staged copy of the input (below) is removed when the run ends, also
+after a failure. The steady per-layer benchmark of the extraction
+pipeline is ``perfbench/run.py`` (see its README).
 """
 
 from __future__ import annotations
@@ -21,7 +26,9 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -39,14 +46,25 @@ def _force(df) -> int:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else None
 
-    from german_ocr_spark.queries import QUERIES
     from german_ocr_spark.session import get_spark
 
     spark = get_spark(cores=cpus, app_name="bench")
+    staged_dir = os.path.join(
+        tempfile.gettempdir(), f"spark_graft_bench_sf{sf}_{os.getpid()}"
+    )
+    try:
+        _bench(spark, sf_dir, sf, cpus, staged_dir)
+    finally:
+        shutil.rmtree(staged_dir, ignore_errors=True)
+        spark.stop()
+
+
+def _bench(spark, sf_dir: str, sf: float | None, cpus: str, staged_dir: str) -> None:
+    from german_ocr_spark.queries import QUERIES
 
     # The fixture tables are ONE parquet row group each, so every scan
     # is a single task regardless of core count — a layout artifact no
@@ -61,12 +79,6 @@ def main() -> None:
     stage = os.environ.get("SPARK_GRAFT_STAGE", "1") != "0"
     staging_sec = 0.0
     if stage:
-        import shutil
-        import tempfile
-
-        staged_dir = os.path.join(
-            tempfile.gettempdir(), f"spark_graft_bench_sf{sf}_{os.getpid()}"
-        )
         shutil.rmtree(staged_dir, ignore_errors=True)
         os.makedirs(staged_dir, exist_ok=True)
         t0 = time.perf_counter()
@@ -142,7 +154,6 @@ def main() -> None:
             }
         )
     )
-    spark.stop()
 
 
 if __name__ == "__main__":

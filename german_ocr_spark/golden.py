@@ -23,7 +23,7 @@ def golden_extract(docs: list[tuple[str, list[tuple[str, str, str, int]]]]) -> p
     rows = []
     for doc_id, spans in docs:
         # order = rank of (offset, kind, media_ref, text) — same total
-        # order as operators.extract.ordered_span_rows / assign_order
+        # order as operators.extract.ordered_span_rows
         for order, (kind, text, media_ref, offset) in enumerate(
             sorted(spans, key=lambda s: (s[3], s[0], s[2], s[1]))
         ):

@@ -6,15 +6,17 @@ flat record format — records separated by RS (``\\x1e``), fields by US
 (``\\x1f``) — so payload text may contain newlines (the PDF kernel needs
 ``-\\n`` hyphenation to survive, SURVEY B6/B7 interplay).
 
-Parsing is pure pandas: ``Series.str.split`` + ``explode`` +
-``str.split(expand=True)`` — no per-row Python. Malformed records mark
-the owning span with an error (reference per-row isolation semantics,
-``german_ocr/ollama_backend.py:167-172``).
+The RS/US split is Arrow compute (``split_pattern`` + list flattening)
+and numeric fields go through ``pd.to_numeric`` — no per-row Python.
+Malformed records mark the owning span with an error (reference per-row
+isolation semantics, ``german_ocr/ollama_backend.py:167-172``).
 """
 
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 RS = "\x1e"  # record separator
 US = "\x1f"  # unit (field) separator
@@ -28,13 +30,14 @@ def serialize_records(rows: list[list], n_text_fields: int = 1) -> str:
     return RS.join(US.join(str(v) for v in r) for r in rows)
 
 
-def _explode_records(span_text: pd.Series) -> pd.DataFrame:
-    """Series[str] (one serialized table per span) → long frame with
-    columns (span_idx, record). span_idx indexes the input Series."""
-    recs = span_text.fillna("").str.split(RS)
-    long = recs.explode()
-    out = pd.DataFrame({"span_idx": long.index, "record": long.to_numpy()})
-    return out[out["record"].astype(str).str.len() > 0].reset_index(drop=True)
+def _explode_records(span_text: pd.Series) -> tuple[pa.Array, pa.Array]:
+    """Series[str] (one serialized table per span) → (span position,
+    record) for every non-empty record, in span order."""
+    arr = pa.array(span_text.fillna("").to_numpy(object), type=pa.large_string())
+    recs = pc.split_pattern(arr, RS)
+    flat, parent = pc.list_flatten(recs), pc.list_parent_indices(recs)
+    keep = pc.greater(pc.binary_length(flat), 0)
+    return parent.filter(keep), flat.filter(keep)
 
 
 def parse_table(
@@ -47,17 +50,28 @@ def parse_table(
     distinct span indices that contained malformed records (those spans
     are excluded from ``rows`` entirely — error isolation is per-span).
     """
-    long = _explode_records(span_text)
-    if long.empty:
+    parent, records = _explode_records(span_text)
+    if not len(records):
         empty = pd.DataFrame(columns=["span_idx", *fields])
         return empty, pd.Series([], dtype=span_text.index.dtype)
 
-    parts = long["record"].str.split(US, n=len(fields) - 1, expand=True)
-    if parts.shape[1] < len(fields):
-        for i in range(parts.shape[1], len(fields)):
-            parts[i] = None
-    parts.columns = fields
-    parts.insert(0, "span_idx", long["span_idx"].to_numpy())
+    # at most len(fields) parts per record (the last field keeps any
+    # further US); missing trailing fields are null
+    split = pc.list_slice(
+        pc.split_pattern(records, US, max_splits=len(fields) - 1),
+        0,
+        len(fields),
+        return_fixed_size_list=True,
+    )
+    parts = pd.DataFrame(
+        {
+            "span_idx": span_text.index.to_numpy()[parent.to_numpy()],
+            **{
+                f: pc.list_element(split, i).to_numpy(zero_copy_only=False)
+                for i, f in enumerate(fields)
+            },
+        }
+    )
 
     bad_mask = parts[fields[-1]].isna()
     for col, dtype in numeric.items():

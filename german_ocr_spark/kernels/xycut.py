@@ -1,70 +1,65 @@
-"""PDF layout parsing (SURVEY B6): recursive XY-cut block segmentation
-with (page, y, x) reading-order fallback.
+"""PDF layout parsing (SURVEY B6): XY-cut block segmentation with
+(page, y, x) reading-order fallback.
 
 Generalizes the reference's per-page PDF handling (page progress at
 ``german_ocr/cloud_client.py:100-102``) into a deterministic layout
-sort: within each page, blocks are recursively split at horizontal
-whitespace gaps (top→bottom), then vertical gaps (left→right) — the
-classic XY-cut — which orders two-column layouts correctly where a
-naive (y, x) sort interleaves the columns.
+sort: within each page, blocks are split at the widest whitespace gap,
+horizontal (top→bottom) or vertical (left→right) — the classic XY-cut —
+which orders two-column layouts correctly where a naive (y, x) sort
+interleaves the columns.
 
-The recursion is per *page group* (bounded depth, numpy interval
-arithmetic), not per row; block-level work stays vectorized. Ties are
-broken by integer block index → bitwise-stable output across partition
-counts (BASELINE.json determinism requirement).
+The cut is level-synchronous over the whole batch. Blocks stay in one
+global (span, page, y0, x0, index) order and carry a segment id; each
+level computes the widest gap of every still-active segment at once
+(segmented running maximum over a (segment, lo) sort) and splits every
+segment that can be cut into two children, top/left before
+bottom/right. After at most ``MAX_DEPTH`` levels one stable sort by
+segment id gives the reading order; within a segment, blocks keep the
+(y0, x0, index) fallback order. There is no per-page or per-segment
+Python loop. Ties are broken by integer block index → bitwise-stable
+output across partition counts (BASELINE.json determinism requirement).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 MAX_DEPTH = 16
 MIN_GAP = 1.0  # minimum whitespace gap (page units) to cut at
 
 
-def _widest_gap(lo: np.ndarray, hi: np.ndarray) -> tuple[float, float]:
-    """(width, midpoint) of the widest uncovered interval between merged
-    [lo, hi) spans; (0, nan) if none."""
-    order = np.argsort(lo, kind="stable")
-    lo, hi = lo[order], hi[order]
-    best_w, best_mid = 0.0, float("nan")
-    cur_hi = hi[0]
-    for i in range(1, len(lo)):
-        w = float(lo[i] - cur_hi)
-        if w >= MIN_GAP and w > best_w:
-            best_w, best_mid = w, float((cur_hi + lo[i]) / 2.0)
-        cur_hi = max(cur_hi, hi[i])
-    return best_w, best_mid
+def _prev_cummax(seg: np.ndarray, hi: np.ndarray) -> np.ndarray:
+    """Running maximum of ``hi`` over the earlier elements of the same
+    segment (``seg`` sorted ascending); nan at each segment's first
+    element."""
+    cm = pd.Series(hi).groupby(seg, sort=False).cummax().to_numpy()
+    prev = np.r_[np.nan, cm[:-1]]
+    prev[np.r_[True, seg[1:] != seg[:-1]]] = np.nan
+    return prev
 
 
-def _xycut(idx: np.ndarray, x0, y0, x1, y1, depth: int) -> list[int]:
-    if len(idx) <= 1 or depth >= MAX_DEPTH:
-        # fallback order: (y0, x0, original index) — deterministic
-        order = np.lexsort((idx, x0[idx], y0[idx]))
-        return [int(i) for i in idx[order]]
-    # Cut at the WIDEST whitespace gap in either direction (ties →
-    # horizontal, i.e. top-to-bottom wins). A two-column body has a wide
-    # vertical inter-column gap that must beat narrow horizontal
-    # inter-paragraph gaps, else columns interleave.
-    yw, ycut = _widest_gap(y0[idx], y1[idx])
-    xw, xcut = _widest_gap(x0[idx], x1[idx])
-    if yw >= xw and yw > 0:
-        top = idx[y0[idx] < ycut]
-        bot = idx[y0[idx] >= ycut]
-        if len(top) and len(bot):
-            return _xycut(top, x0, y0, x1, y1, depth + 1) + _xycut(
-                bot, x0, y0, x1, y1, depth + 1
-            )
-    if xw > 0:
-        left = idx[x0[idx] < xcut]
-        right = idx[x0[idx] >= xcut]
-        if len(left) and len(right):
-            return _xycut(left, x0, y0, x1, y1, depth + 1) + _xycut(
-                right, x0, y0, x1, y1, depth + 1
-            )
-    order = np.lexsort((idx, x0[idx], y0[idx]))
-    return [int(i) for i in idx[order]]
+def _segment_gaps(
+    seg: np.ndarray, lo: np.ndarray, hi: np.ndarray, nseg: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per segment id: (width, midpoint) of the widest uncovered interval
+    between the merged [lo, hi) spans of its elements, the first one in
+    ``lo`` order on ties; (0, nan) where no gap reaches ``MIN_GAP``."""
+    o = np.lexsort((lo, seg))
+    s, lo = seg[o], lo[o]
+    prev = _prev_cummax(s, hi[o])
+    with np.errstate(invalid="ignore"):  # ±inf coordinates: nan gaps
+        gap = lo - prev
+        ok = gap >= MIN_GAP
+        width = np.zeros(nseg)
+        np.maximum.at(width, s[ok], gap[ok])
+        hit = np.flatnonzero(ok & (gap == width[s]))
+        hit = hit[np.r_[True, s[hit][1:] != s[hit][:-1]]] if hit.size else hit
+        mid = np.full(nseg, np.nan)
+        mid[s[hit]] = (prev[hit] + lo[hit]) / 2.0
+    return width, mid
 
 
 def reading_order(blocks: pd.DataFrame) -> pd.DataFrame:
@@ -72,47 +67,63 @@ def reading_order(blocks: pd.DataFrame) -> pd.DataFrame:
     with an ``rank`` column: 0-based reading order within span
     (pages in ascending order; XY-cut within page).
 
-    Implementation is one global lexsort + numpy group slicing. Pages
-    whose blocks are vertically disjoint (the overwhelmingly common
-    single-column case) take a pure-array fast path that is provably
-    identical to the XY-cut result: with disjoint y-intervals every
-    horizontal cut preserves y-order and the terminal fallback is the
-    same (y0, x0, idx) lexsort, so the sorted order IS the cut order.
-    Only genuinely overlapping layouts (multi-column) recurse."""
+    Pages whose blocks are vertically disjoint (the overwhelmingly
+    common single-column case) start out terminal: with disjoint
+    y-intervals every horizontal cut preserves y-order and the terminal
+    fallback is the same (y0, x0, idx) order, so the sorted order IS
+    the cut order. Only overlapping layouts (multi-column) are cut."""
     if blocks.empty:
         out = blocks.copy()
         out["rank"] = pd.Series([], dtype="int64")
         return out
     df = blocks.reset_index(drop=True)
-    x0 = df["x0"].to_numpy(float)
-    y0 = df["y0"].to_numpy(float)
-    x1 = df["x1"].to_numpy(float)
-    y1 = df["y1"].to_numpy(float)
     span = df["span_idx"].to_numpy()
     page = df["page"].to_numpy()
     n = len(df)
 
-    idx0 = np.arange(n)
-    order0 = np.lexsort((idx0, x0, y0, page, span))
-    s_span, s_page = span[order0], page[order0]
-    s_y0, s_y1 = y0[order0], y1[order0]
-    change = (
-        np.flatnonzero((s_span[1:] != s_span[:-1]) | (s_page[1:] != s_page[:-1]))
-        + 1
+    order0 = np.lexsort(
+        (np.arange(n), df["x0"].to_numpy(float), df["y0"].to_numpy(float), page, span)
     )
-    bounds = np.concatenate(([0], change, [n]))
+    x0, y0, x1, y1 = (df[c].to_numpy(float)[order0] for c in ("x0", "y0", "x1", "y1"))
+    s_span, s_page = span[order0], page[order0]
+    # segment id per block in order0; one segment per (span, page) to start
+    seg = np.cumsum(np.r_[False, (s_span[1:] != s_span[:-1]) | (s_page[1:] != s_page[:-1])])
+    nseg = int(seg[-1]) + 1
+    # a page is cut only if some block starts above the lowest bottom so far
+    with np.errstate(invalid="ignore"):
+        overlap = y0 < _prev_cummax(seg, y1)
+    active = np.bincount(seg[overlap], minlength=nseg) > 0
 
-    out_positions = np.empty(n, dtype=np.int64)
-    pos = 0
-    for b0, b1 in zip(bounds[:-1], bounds[1:]):
-        m = b1 - b0
-        seg = order0[b0:b1]
-        if m > 1:
-            gy0, gy1 = s_y0[b0:b1], s_y1[b0:b1]
-            if not np.all(gy0[1:] >= np.maximum.accumulate(gy1)[:-1]):
-                seg = np.asarray(_xycut(seg, x0, y0, x1, y1, 0), dtype=np.int64)
-        out_positions[pos : pos + m] = seg
-        pos += m
+    for _ in range(MAX_DEPTH):
+        a = np.flatnonzero(active[seg])
+        if not a.size:
+            break
+        s = seg[a]
+        yw, ycut = _segment_gaps(s, y0[a], y1[a], nseg)
+        xw, xcut = _segment_gaps(s, x0[a], x1[a], nseg)
+        size = np.bincount(s, minlength=nseg)
+        below = y0[a] >= ycut[s]
+        right = x0[a] >= xcut[s]
+        n_below = np.bincount(s[below], minlength=nseg)
+        n_right = np.bincount(s[right], minlength=nseg)
+        # cut at the WIDEST gap in either direction (ties → horizontal):
+        # a two-column body's wide inter-column gap must beat its narrow
+        # inter-paragraph gaps, else the columns interleave
+        cut_y = active & (yw >= xw) & (yw > 0) & (n_below > 0) & (n_below < size)
+        cut_x = active & ~cut_y & (xw > 0) & (n_right > 0) & (n_right < size)
+        split = cut_y | cut_x
+        # renumber in reading order: a split segment's children take
+        # ids first and first + 1, every other segment keeps one id
+        first = np.arange(nseg) + np.cumsum(split) - split
+        seg = first[seg]
+        seg[a] += np.where(cut_y[s], below, cut_x[s] & right)
+        nseg += int(split.sum())
+        active = np.zeros(nseg, dtype=bool)
+        active[first[split]] = active[first[split] + 1] = True
+        active &= np.bincount(seg, minlength=nseg) > 1
+
+    # within a segment order0 already is the (y0, x0, idx) fallback order
+    out_positions = order0[np.argsort(seg, kind="stable")]
 
     # per-span 0-based rank over the global (span, page, in-page) order
     ospan = span[out_positions]
@@ -131,5 +142,14 @@ def extract_pdf_text(blocks: pd.DataFrame) -> pd.Series:
     if blocks.empty:
         return pd.Series([], dtype=object)
     ordered = reading_order(blocks)
-    ordered["text"] = ordered["text"].fillna("")
-    return ordered.groupby("span_idx", sort=True)["text"].agg("\n".join)
+    span = ordered["span_idx"].to_numpy()
+    starts = np.flatnonzero(np.r_[True, span[1:] != span[:-1]])
+    texts = pa.ListArray.from_arrays(
+        pa.array(np.r_[starts, len(span)], type=pa.int32()),
+        pa.array(ordered["text"].fillna("").to_numpy(object), type=pa.string()),
+    )
+    return pd.Series(
+        pc.binary_join(texts, "\n").to_numpy(zero_copy_only=False),
+        index=pd.Index(span[starts], name="span_idx"),
+        name="text",
+    )

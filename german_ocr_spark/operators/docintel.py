@@ -7,7 +7,7 @@ reference code implements it. This operator is the Spark re-expression:
 one output row per layout BLOCK carrying its page, bounding box, and
 XY-cut reading rank — the coordinates a viewer overlays on the original
 document. The XY-cut kernel already computes every one of these values
-for the text pipeline (``kernels/xycut.py:70-124``) and then discards
+for the text pipeline (``kernels/xycut.py`` ``reading_order``) and then discards
 them after the reading-order sort; here they become output columns.
 
 Block text is emitted RAW (no German normalization): the annotation

@@ -17,7 +17,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.german import normalize_series
@@ -132,48 +132,21 @@ def _extract_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 # --------------------------------------------------------- Spark stages
-def explode_spans(docs: DataFrame) -> DataFrame:
-    """(doc_id, spans) → one row per span (SURVEY B2). Documents with
-    empty/null span arrays contribute no rows (they are tracked by
-    lineage, not by empty output rows)."""
-    return docs.select(
-        "doc_id", F.explode("spans").alias("span")
-    ).select(
-        "doc_id",
-        F.col("span.offset").alias("offset"),
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-    )
-
-
-def assign_order(span_rows: DataFrame) -> DataFrame:
-    """order = rank of offset within doc (0-based), for inputs that are
-    ALREADY exploded to span rows (one shuffle: the window regroups by
-    doc_id). When the input is the nested (doc_id, spans) shape, use
-    ``ordered_span_rows`` instead — it assigns the same order without
-    any shuffle."""
-    w = Window.partitionBy("doc_id").orderBy("offset", "kind", "media_ref", "text")
-    return span_rows.withColumn(
-        "order", (F.row_number().over(w) - F.lit(1)).cast("int")
-    )
-
-
 def ordered_span_rows(docs: DataFrame) -> DataFrame:
     """(doc_id, spans) → ordered span rows with ZERO shuffles.
 
     Because a document's spans arrive nested in one row, their order can
     be assigned in-row: sort the array by (offset, kind, media_ref,
-    text) and posexplode — ``pos`` IS the order. The window-based
-    alternative (explode_spans + assign_order) shuffles the full text
+    text) and posexplode — ``pos`` IS the order. A window over exploded
+    span rows (row_number per doc_id) would shuffle the full text
     payload once just to regroup rows that started out grouped; at
     100 TB that shuffle is the single largest cost in the job, and this
-    formulation deletes it. The whole extraction plan becomes one
+    formulation avoids it. The whole extraction plan becomes one
     map-only stage: scan → in-row sort/explode → mapInPandas.
 
     Input span order is NOT trusted (FIXTURES F1: docs may arrive with
-    unsorted spans); the in-row sort enforces the same total order as
-    ``assign_order``."""
+    unsorted spans); the in-row sort enforces the total order
+    (offset, kind, media_ref, text) within each document."""
     sortable = F.transform(
         "spans",
         lambda s: F.struct(

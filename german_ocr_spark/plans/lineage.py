@@ -221,6 +221,15 @@ def record_bucketing(
     )
 
 
+def _fresh_local_table(spark: SparkSession, output_dir: str) -> bool:
+    """True when the lineage dir resolves to the local FS and does not
+    exist: a fresh table, known without a Spark read. Spark's
+    PATH_NOT_FOUND on a missing dir would log listener stack traces;
+    non-local paths keep the read-and-catch probe."""
+    local = _local_posix_path(spark, lineage_path(output_dir))
+    return local is not None and not os.path.isdir(local)
+
+
 def recorded_bucketing(spark: SparkSession, output_dir: str) -> int | None:
     """The durably recorded bucket count, or None for a fresh/legacy
     table (legacy tables adopt the next run's value).
@@ -232,6 +241,8 @@ def recorded_bucketing(spark: SparkSession, output_dir: str) -> int | None:
     disagree on the count: a table whose committed buckets were written
     modulo two different n_buckets is corrupt, and adopting either count
     silently duplicates or drops documents on resume."""
+    if _fresh_local_table(spark, output_dir):
+        return None
     try:
         ldf = read_lineage(spark, output_dir)
     except Exception:
@@ -256,6 +267,8 @@ def recorded_bucketing(spark: SparkSession, output_dir: str) -> int | None:
 
 
 def committed_buckets(spark: SparkSession, output_dir: str) -> set[int]:
+    if _fresh_local_table(spark, output_dir):
+        return set()
     path = lineage_path(output_dir)
     try:
         lin = spark.read.parquet(path)

@@ -20200,7 +20200,7 @@ def q234(spark, sf_dir):
     SAME deterministic 400-doc corpus as q32 and value-checked against
     the committed single-node golden parquet (q32's oracle
     discipline). The XY-cut kernel computed every coordinate all along
-    (kernels/xycut.py:70-124) and discarded them after the
+    (kernels/xycut.py reading_order) and discarded them after the
     reading-order sort; this surfaces them as output columns, so text
     (q32) and coordinates (here) join on (doc_id, order).
 
