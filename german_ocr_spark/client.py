@@ -257,12 +257,12 @@ class GermanOCRSpark:
             and not t.is_alive()
         ):
             # The worker thread is dead. A status read can RACE the
-            # worker's final lineage append (a listing taken mid-commit
-            # falls into pipeline.status's pending fallback), so a
-            # non-terminal status observed BEFORE noticing the death is
-            # not authoritative. Thread death strictly follows the last
-            # append, so re-reading now yields the true final state;
-            # retry once more for a transient listing error. Only a
+            # worker's final lineage append (a read taken just before
+            # it sees the pre-commit state), so a non-terminal status
+            # observed BEFORE noticing the death is not authoritative.
+            # Thread death strictly follows the last append, so
+            # re-reading now yields the true final state; read once
+            # more after a short pause for good measure. Only a
             # post-mortem read that still shows an unfinished job is
             # the reference's 'failed' terminal state
             # (cloud_client.py:443-452) — a genuine crash also leaves
@@ -417,10 +417,17 @@ class GermanOCRSpark:
         the job path.
 
         Scale shape: jobs are a dimension (driver-side dir listing of
-        the workdir is jobs-sized, not corpus-sized); each job's
-        lineage is a handful of rows per bucket. The union + rollup is
-        a broadcast-cost aggregation."""
-        jobs: list[tuple[str, int]] = []
+        the workdir is jobs-sized, not corpus-sized) and each job's
+        lineage is a handful of rows per bucket, so every job is one
+        driver-side ``lineage_rows`` read folded in Python — status
+        through ``pipeline.status_of``, the same fold as ``get_job`` —
+        and the report is ONE small ``createDataFrame``. A job with no
+        ``_lineage`` dir yet, or an empty one (a crash between makedirs
+        and the first atomic rename), folds to a 'pending' row with
+        zero counts."""
+        from .plans import lineage as lin
+
+        out = []
         if os.path.isdir(self._workdir):
             for name in sorted(os.listdir(self._workdir)):
                 cfg_path = os.path.join(self._workdir, name, "_job.json")
@@ -428,113 +435,36 @@ class GermanOCRSpark:
                     continue
                 with open(cfg_path) as fh:
                     cfg = json.load(fh)
-                jobs.append((cfg["job_id"], int(cfg["n_buckets"])))
-        ddl = (
+                rows = lin.lineage_rows(
+                    self._spark, os.path.join(self._workdir, cfg["job_id"])
+                )
+                st = pipeline.status_of(rows, int(cfg["n_buckets"]))
+                stamps = [
+                    r.committed_at
+                    for r in rows
+                    if r.status == "committed" and r.committed_at is not None
+                ]
+                out.append(
+                    (
+                        cfg["job_id"],
+                        st.status,
+                        st.buckets_done,
+                        st.buckets_total,
+                        st.doc_count,
+                        st.span_count,
+                        st.error_count,
+                        sum(len(r.files or ()) for r in rows if r.status == "committed"),
+                        min(stamps, default=None),
+                        max(stamps, default=None),
+                    )
+                )
+        return self._spark.createDataFrame(
+            sorted(out, key=lambda r: r[0]),
             "job_id string, status string, buckets_done int, "
             "buckets_total int, doc_count long, span_count long, "
             "error_count long, n_files long, first_commit_at string, "
-            "last_commit_at string"
+            "last_commit_at string",
         )
-        if not jobs:
-            return self._spark.createDataFrame([], ddl)
-        from .plans import lineage as lin
-
-        parts = []
-        # A job submitted but not yet through its first lineage append
-        # (or one that crashed before record_bucketing) has no _lineage
-        # dir (read_lineage raises) — or, after a crash between
-        # makedirs and the atomic rename, an EMPTY one (read_lineage
-        # returns zero rows, so the groupBy below emits no row for
-        # it). BOTH states are simply 'pending' and must not fail or
-        # silently drop out of the workdir-wide report (round-4
-        # ADVICE finding; pipeline.status() degrades the same way).
-        # The uniform fix: every job missing from the aggregate —
-        # whatever the reason — gets a pending row via the anti-join
-        # at the end.
-        for job_id, n_buckets in jobs:
-            try:
-                ldf = lin.read_lineage(
-                    self._spark, os.path.join(self._workdir, job_id)
-                )
-            except Exception:
-                continue
-            parts.append(
-                ldf.withColumn("job_id", F.lit(job_id)).withColumn(
-                    "buckets_total", F.lit(n_buckets)
-                )
-            )
-        pending_defaults = self._spark.createDataFrame(
-            [
-                (job_id, "pending", 0, n_buckets, 0, 0, 0, 0, None, None)
-                for job_id, n_buckets in jobs
-            ],
-            ddl,
-        )
-        if not parts:
-            return pending_defaults.orderBy("job_id")
-        allj = parts[0]
-        for p in parts[1:]:
-            allj = allj.unionByName(p)
-        com = F.col("status") == "committed"
-        agg = allj.groupBy("job_id", "buckets_total").agg(
-            F.countDistinct(
-                F.when(com & (F.col("bucket_id") >= 0), F.col("bucket_id"))
-            ).cast("int").alias("buckets_done"),
-            F.coalesce(
-                F.sum(F.when(com, F.col("doc_count"))), F.lit(0)
-            ).alias("doc_count"),
-            F.coalesce(
-                F.sum(F.when(com, F.col("span_count"))), F.lit(0)
-            ).alias("span_count"),
-            F.coalesce(
-                F.sum(F.when(com, F.col("error_count"))), F.lit(0)
-            ).alias("error_count"),
-            F.coalesce(
-                F.sum(F.when(com, F.size("files"))), F.lit(0)
-            ).alias("n_files"),
-            F.min(F.when(com, F.col("committed_at"))).alias(
-                "first_commit_at"
-            ),
-            F.max(F.when(com, F.col("committed_at"))).alias(
-                "last_commit_at"
-            ),
-            # status MUST agree with pipeline.status() (round-4 ADVICE):
-            # cancelled iff cancel rows OUTNUMBER resume rows (a resumed
-            # run durably clears intent — lin.mark_resumed), and a job
-            # cancelled mid-run but resumed to completion is 'completed'
-            # — completed takes precedence in the CASE below.
-            (
-                F.sum(
-                    F.when(F.col("status") == "cancelled", 1).otherwise(0)
-                )
-                > F.sum(
-                    F.when(F.col("status") == "resumed", 1).otherwise(0)
-                )
-            ).alias("_cancelled"),
-        )
-        usage = agg.select(
-            "job_id",
-            F.when(
-                F.col("buckets_done") >= F.col("buckets_total"),
-                F.lit("completed"),
-            )
-            .when(F.col("_cancelled"), F.lit("cancelled"))
-            .when(F.col("buckets_done") > 0, F.lit("processing"))
-            .otherwise(F.lit("pending"))
-            .alias("status"),
-            "buckets_done",
-            "buckets_total",
-            "doc_count",
-            "span_count",
-            "error_count",
-            "n_files",
-            "first_commit_at",
-            "last_commit_at",
-        )
-        missing = pending_defaults.join(
-            usage.select("job_id"), "job_id", "left_anti"
-        )
-        return usage.unionByName(missing).orderBy("job_id")
 
     def get_balance(self) -> dict:
         """Account balance — the reference's ``get_balance``

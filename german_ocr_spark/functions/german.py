@@ -8,7 +8,8 @@ confusion maps).
 
 The rules are defined ONCE and rendered to:
   * a vectorized pandas kernel (``normalize_series``) — the pipeline's
-    mapInPandas hot path, pure ``Series.str.replace`` (no per-row Python);
+    mapInPandas hot path, Arrow/RE2 ``replace_substring_regex`` (no
+    per-row Python);
   * a Spark Column expression (``normalize_col``) — whole-stage-codegen
     JVM path for SQL-expressible uses;
   * a DuckDB SQL expression (``normalize_sql``) — the driver's oracle.
@@ -33,6 +34,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -130,32 +133,6 @@ def normalize_text(s: str) -> str:
     return s.strip()
 
 
-def _normalize_series_sequential(s):
-    """Python-regex fallback: the RULES chain applied literally, one
-    ``Series.str.replace`` pass per rule — identical to
-    ``normalize_text`` by construction. (An earlier 5-pass "fused"
-    fallback broke its own fusion proof once \\b became ASCII
-    lookarounds: fusing the ſ-rules with the ``nnd`` rules lets the
-    lookaround see the pre-ſ→s text, so ``Bünndſ`` diverged. The
-    fallback only exists for pyarrow-less hosts, where correctness
-    beats the ~2x pass saving — keep it literal.)"""
-    out = s.fillna("")
-    for pat, repl in _COMPILED:
-        out = out.str.replace(pat, repl, regex=True)
-    out = out.str.strip()
-    return out.where(~s.isna(), None)
-
-
-try:  # Arrow/RE2 fast path availability probe
-    import pyarrow as _pa
-    import pyarrow.compute as _pc
-
-    _pc.replace_substring_regex
-    _HAS_ARROW_RE2 = True
-except Exception:  # pragma: no cover — pyarrow is baked into this env
-    _HAS_ARROW_RE2 = False
-
-
 def _normalize_series_arrow(s):
     """Arrow/RE2 kernel: the RULES chain applied rule-for-rule via
     ``pyarrow.compute.replace_substring_regex`` (C++ RE2, zero Python
@@ -167,29 +144,25 @@ def _normalize_series_arrow(s):
     (20k docs, seed 3): normalization ≈1.1 s of ≈2.6 s (PDF 0.64 s,
     HTML 0.30 s, OCR 0.17 s), RS/US parse ≈0.87 s, boilerplate 0.27 s,
     XY-cut with the text join 0.20 s."""
-    arr = _pa.array(s.fillna(""), type=_pa.string())
+    arr = pa.array(s.fillna(""), type=pa.string())
     for r in RULES:
-        arr = _pc.replace_substring_regex(
+        arr = pc.replace_substring_regex(
             arr, pattern=r.pattern, replacement=_duck_repl(r.repl)
         )
-    arr = _pc.utf8_trim_whitespace(arr)
+    arr = pc.utf8_trim_whitespace(arr)
     out = arr.to_pandas().astype(object)
     out.index = s.index
     return out.where(~s.isna(), None)
 
 
 def normalize_series(s):
-    """Vectorized pandas kernel: Series[str] → Series[str].
-
-    Arrow/RE2 when available (the default in this environment),
-    literal sequential Python-regex otherwise; both equal the rule
-    chain (``normalize_text``) — asserted by the brute-force and
-    hypothesis suites, which exercise BOTH paths explicitly. This is
-    the 'ocr' kernel the pipeline runs inside mapInPandas (SURVEY
-    B7/B16)."""
-    if _HAS_ARROW_RE2:
-        return _normalize_series_arrow(s)
-    return _normalize_series_sequential(s)
+    """Vectorized pandas kernel: Series[str] → Series[str], the
+    Arrow/RE2 chain. Every mapInPandas stage already needs pyarrow, so
+    there is no pure-Python fallback; the scalar ``normalize_text`` is
+    the oracle the brute-force and hypothesis suites compare against.
+    This is the 'ocr' kernel the pipeline runs inside mapInPandas
+    (SURVEY B7/B16)."""
+    return _normalize_series_arrow(s)
 
 
 def normalize_col(col: Column) -> Column:

@@ -9,11 +9,15 @@ flat record format — records separated by RS (``\\x1e``), fields by US
 The RS/US split is Arrow compute (``split_pattern`` + list flattening)
 and numeric fields go through ``pd.to_numeric`` — no per-row Python.
 Malformed records mark the owning span with an error (reference per-row
-isolation semantics, ``german_ocr/ollama_backend.py:167-172``).
+isolation semantics, ``german_ocr/ollama_backend.py:167-172``): a field
+that does not parse, and an int field whose value is not finite,
+integral and inside int64 ("inf", "1.5", "99999999999999999999"). The
+parsers never raise on any input text.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -38,6 +42,22 @@ def _explode_records(span_text: pd.Series) -> tuple[pa.Array, pa.Array]:
     flat, parent = pc.list_flatten(recs), pc.list_parent_indices(recs)
     keep = pc.greater(pc.binary_length(flat), 0)
     return parent.filter(keep), flat.filter(keep)
+
+
+def _int64_valid(conv: pd.Series) -> pd.Series:
+    """Where a ``pd.to_numeric`` result holds a finite, integral value
+    inside the int64 range. pandas picks the dtype per batch: int64
+    (always valid), uint64 (valid up to int64 max) or float64."""
+    if conv.dtype.kind == "u":
+        return conv <= np.iinfo(np.int64).max
+    if conv.dtype.kind == "f":
+        return (
+            np.isfinite(conv)
+            & (conv == np.floor(conv))
+            & (conv >= -(2.0**63))
+            & (conv < 2.0**63)
+        )
+    return pd.Series(True, index=conv.index)
 
 
 def parse_table(
@@ -76,7 +96,7 @@ def parse_table(
     bad_mask = parts[fields[-1]].isna()
     for col, dtype in numeric.items():
         conv = pd.to_numeric(parts[col], errors="coerce")
-        bad_mask |= conv.isna()
+        bad_mask |= ~_int64_valid(conv) if dtype == "int64" else conv.isna()
         parts[col] = conv
     bad_spans = parts.loc[bad_mask, "span_idx"].drop_duplicates()
 

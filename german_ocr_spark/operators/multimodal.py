@@ -49,6 +49,18 @@ _REAL_MAGICS = {
 }
 
 
+def _payload(values: np.ndarray, dtype, n: int, what: str) -> bytes:
+    """The payload bytes of ``values``, which must be exactly the ``n``
+    values of ``dtype`` that the header announces — a mismatch would
+    write a buffer whose header and payload disagree."""
+    if values.dtype != dtype or values.size != n:
+        raise ValueError(
+            f"{what} payload must be {n} {np.dtype(dtype).name} values, "
+            f"got {values.size} {values.dtype.name}"
+        )
+    return values.tobytes()
+
+
 def encode_fake_image(
     width: int, height: int, seed: int = 0, pixels: np.ndarray | None = None
 ) -> bytes:
@@ -59,7 +71,11 @@ def encode_fake_image(
     if pixels is None:
         rng = np.random.default_rng(seed)
         pixels = rng.integers(0, 256, size=width * height, dtype=np.uint8)
-    return MAGIC_IMG + struct.pack("<II", width, height) + pixels.tobytes()
+    return (
+        MAGIC_IMG
+        + struct.pack("<II", width, height)
+        + _payload(pixels, np.uint8, width * height, "FIMG")
+    )
 
 
 def encode_fake_audio(
@@ -72,7 +88,9 @@ def encode_fake_audio(
         rng = np.random.default_rng(seed)
         samples = rng.integers(-(2**15), 2**15, size=n_samples, dtype=np.int16)
     return (
-        MAGIC_AUD + struct.pack("<II", sample_rate, n_samples) + samples.tobytes()
+        MAGIC_AUD
+        + struct.pack("<II", sample_rate, n_samples)
+        + _payload(samples, np.int16, n_samples, "FAUD")
     )
 
 
@@ -86,7 +104,11 @@ def encode_fake_video(
     if pixels is None:
         rng = np.random.default_rng(seed)
         pixels = rng.integers(0, 256, size=n_frames * w * h, dtype=np.uint8)
-    return MAGIC_VID + struct.pack("<III", n_frames, w, h) + pixels.tobytes()
+    return (
+        MAGIC_VID
+        + struct.pack("<III", n_frames, w, h)
+        + _payload(pixels, np.uint8, n_frames * w * h, "FVID")
+    )
 
 
 def _reject_real_format(buf: bytes) -> None:

@@ -117,14 +117,25 @@ def run(
     All jobs run under the ``lin.job_group_id(snapshot_id)`` job group,
     so ``cancel(spark, output_dir, snapshot_id)`` from another thread
     aborts the run mid-flight (A17).
+
+    Lineage is read ONCE, at the start: bucket pinning, the pending
+    set and the cancel arithmetic fold that snapshot, and the
+    ``RunResult`` totals are its committed totals plus what this run's
+    own commit groups wrote. That is exact under the single-writer
+    contract (``plans.lineage``). Commits that a concurrent writer with
+    a DISTINCT snapshot_id lands while this run is in flight are not in
+    the returned totals or ``buckets_skipped`` (and this run does not
+    skip their buckets, as before), so afterwards ``status()`` is the
+    authoritative view.
     """
+    lineage = lin.lineage_rows(spark, output_dir)
     # Bucket-count pinning: the committed-bucket set is only meaningful
     # modulo the ORIGINAL n_buckets. Resuming with a different value
     # silently duplicates docs (new buckets re-extract already-covered
     # docs) or drops them (status sees "all committed" while high
     # buckets never ran) — refuse loudly instead. First run on a table
     # records the count durably; legacy tables adopt this run's value.
-    recorded = lin.recorded_bucketing(spark, output_dir)
+    recorded = lin.recorded_bucketing(lineage)
     if recorded is None:
         lin.record_bucketing(
             spark, output_dir, n_buckets, snapshot_id, committed_at
@@ -135,7 +146,7 @@ def run(
             f"n_buckets={recorded}; resume must use the same value "
             f"(got {n_buckets})"
         )
-    done = lin.committed_buckets(spark, output_dir)
+    done = lin.committed_buckets(lineage)
     pending = [b for b in range(n_buckets) if b not in done]
     if bucket_group_size is None:
         bucket_group_size = max(len(pending), 1)
@@ -150,23 +161,14 @@ def run(
 
     gid = lin.job_group_id(snapshot_id)
     _cancelled_groups.discard(gid)  # a fresh run supersedes old intent
-    if groups:
-        # durably clear outstanding cancel intent so a poller doesn't
-        # see a live resumed run as 'cancelled' (one 'resumed' row per
-        # unmatched 'cancelled' row; see lin.mark_resumed)
-        try:
-            ldf = lin.read_lineage(spark, output_dir)
-            counts = ldf.groupBy("status").count().collect()
-            by = {r["status"]: r["count"] for r in counts}
-            outstanding = int(by.get("cancelled", 0)) - int(
-                by.get("resumed", 0)
-            )
-        except Exception:
-            outstanding = 0
-        if outstanding > 0:
-            lin.mark_resumed(
-                spark, output_dir, snapshot_id, committed_at, n=outstanding
-            )
+    # durably clear outstanding cancel intent so a poller doesn't see a
+    # live resumed run as 'cancelled' (one 'resumed' row per unmatched
+    # 'cancelled' row; see lin.mark_resumed)
+    outstanding = lin.outstanding_cancels(lineage)
+    if groups and outstanding > 0:
+        lin.mark_resumed(
+            spark, output_dir, snapshot_id, committed_at, n=outstanding
+        )
     sc = spark.sparkContext
     sc.setJobGroup(
         gid,
@@ -246,25 +248,15 @@ def run(
         except Exception:
             pass
 
-    # record_bucketing wrote a lineage row at run start, so the lineage
-    # table always exists here; any read failure is a REAL error
-    # (transient FS/parquet fault after buckets committed) and must
-    # propagate rather than silently report doc_count=0 for a
-    # successful run.
-    ldf = lin.read_lineage(spark, output_dir)
-    tot = ldf.filter(F.col("status") == "committed").agg(
-        F.sum("doc_count").alias("d"),
-        F.sum("span_count").alias("s"),
-        F.sum("error_count").alias("e"),
-    ).collect()[0]
+    d0, s0, e0 = lin.committed_totals(lineage)
     return RunResult(
         snapshot_id=snapshot_id,
         buckets_total=n_buckets,
         buckets_processed=processed,
         buckets_skipped=len(done),
-        doc_count=int(tot.d or 0),
-        span_count=int(tot.s or 0),
-        error_count=int(tot.e or 0),
+        doc_count=d0 + cum_d,
+        span_count=s0 + cum_s,
+        error_count=e0 + cum_e,
     )
 
 
@@ -300,63 +292,40 @@ def status(
     ``get_job``): pending (nothing committed), processing, completed
     (all buckets committed), or cancelled (a cancel control row exists
     and the run never completed)."""
-    try:
-        ldf = lin.read_lineage(spark, output_dir)
-        agg = (
-            ldf.agg(
-                F.countDistinct(
-                    F.when(F.col("status") == "committed", F.col("bucket_id"))
-                ).alias("b"),
-                F.sum(
-                    F.when(F.col("status") == "committed", F.col("doc_count"))
-                ).alias("d"),
-                F.sum(
-                    F.when(F.col("status") == "committed", F.col("span_count"))
-                ).alias("s"),
-                F.sum(
-                    F.when(F.col("status") == "committed", F.col("error_count"))
-                ).alias("e"),
-                F.sum(
-                    F.when(F.col("status") == "cancelled", 1).otherwise(0)
-                ).alias("c"),
-                F.sum(
-                    F.when(F.col("status") == "resumed", 1).otherwise(0)
-                ).alias("r"),
-                # the durable bucket count (record_bucketing) rides the
-                # same aggregate pass — a poller never needs to know the
-                # original n_buckets to get a correct completed verdict
-                F.max(
-                    F.when(
-                        F.col("status") == "bucketing", F.col("doc_count")
-                    )
-                ).alias("nb"),
-                F.max("snapshot_id").alias("snap"),
-            )
-        ).collect()[0]
-    except Exception:
-        return JobStatus("", "pending", 0, n_buckets, 0, 0, 0)
-    if agg.nb is not None:
-        n_buckets = int(agg.nb)
-    buckets_done = int(agg.b or 0)
+    return status_of(lin.lineage_rows(spark, output_dir), n_buckets)
+
+
+def status_of(rows: list[lin.LineageRow], n_buckets: int) -> JobStatus:
+    """The status fold over lineage rows — shared by ``status`` and
+    ``client.get_usage``, so both report the same verdict. The durable
+    bucket count (``record_bucketing``) overrides ``n_buckets``, so a
+    poller never needs the original value for a correct completed
+    verdict."""
+    marks = [r.doc_count for r in rows if r.status == "bucketing" and r.doc_count is not None]
+    if marks:
+        n_buckets = int(max(marks))
+    buckets_done = len(
+        {r.bucket_id for r in rows if r.status == "committed" and r.bucket_id is not None}
+    )
+    d, s, e = lin.committed_totals(rows)
     # cancelled iff cancel rows outnumber resume rows (a resumed run
     # durably clears intent at start — see lin.mark_resumed)
-    cancelled_outstanding = int(agg.c or 0) > int(agg.r or 0)
     if buckets_done >= n_buckets:
         st = "completed"
-    elif cancelled_outstanding:
+    elif lin.outstanding_cancels(rows) > 0:
         st = "cancelled"
     elif buckets_done > 0:
         st = "processing"
     else:
         st = "pending"
     return JobStatus(
-        job_id=agg.snap or "",
+        job_id=max((r.snapshot_id for r in rows if r.snapshot_id is not None), default=""),
         status=st,
         buckets_done=buckets_done,
         buckets_total=n_buckets,
-        doc_count=int(agg.d or 0),
-        span_count=int(agg.s or 0),
-        error_count=int(agg.e or 0),
+        doc_count=d,
+        span_count=s,
+        error_count=e,
     )
 
 

@@ -136,16 +136,14 @@ def compact(
     existing commit so as_of time travel keeps seeing the
     pre-compaction layout (``lineage.next_committed_at``)."""
     d = lin.data_path(output_dir)
-    committed = [
-        os.path.relpath(f, d) for f in lin.committed_files(spark, output_dir)
-    ]
+    lineage = lin.lineage_rows(spark, output_dir)
     bins = plan_compaction(
-        _file_sizes(spark, d, committed), target_bytes, min_input_files
+        _file_sizes(spark, d, lin.live_files(lineage)), target_bytes, min_input_files
     )
     if bins:
-        lin.assert_snapshot_unused(spark, output_dir, snapshot_id)
+        lin.assert_snapshot_unused(lineage, snapshot_id)
         if committed_at is None:
-            committed_at = lin.next_committed_at(spark, output_dir)
+            committed_at = lin.next_committed_at(lineage)
     files_in = files_out = 0
     for i, bin_files in enumerate(bins):
         subdir = f"{snapshot_id}-c{i:05d}"

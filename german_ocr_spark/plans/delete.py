@@ -56,15 +56,36 @@ def delete_docs(
     its victims already gone never trips it); ``committed_at`` defaults
     to a derived stamp sorting after every existing commit, keeping the
     pre-delete snapshot reachable via as_of time travel."""
-    files = lin.committed_files(spark, output_dir)
-    if not files or not doc_ids:
+    return _delete_docs(
+        spark,
+        output_dir,
+        lin.lineage_rows(spark, output_dir),
+        doc_ids,
+        snapshot_id,
+        committed_at,
+    )
+
+
+def _delete_docs(
+    spark: SparkSession,
+    output_dir: str,
+    rows: list[lin.LineageRow],
+    doc_ids: list[str],
+    snapshot_id: str,
+    committed_at: str | None,
+) -> dict:
+    """``delete_docs`` over an already-read lineage snapshot ``rows``
+    (``upsert_docs`` shares its one read)."""
+    live = lin.live_files(rows)
+    if not live or not doc_ids:
         return {"files_rewritten": 0, "rows_deleted": 0}
+    d = lin.data_path(output_dir)
     victims = F.col("doc_id").isin(list(doc_ids))
 
     # 1. locate: which committed files contain a victim row
     affected = [
         r.f
-        for r in spark.read.parquet(*files)
+        for r in spark.read.parquet(*(os.path.join(d, f) for f in live))
         .filter(victims)
         .select(F.input_file_name().alias("f"))
         .distinct()
@@ -72,20 +93,17 @@ def delete_docs(
     ]
     if not affected:
         return {"files_rewritten": 0, "rows_deleted": 0}
-    d = lin.data_path(output_dir)
     # input_file_name returns qualified URIs (file:/..., s3a://...);
     # resolve back to the manifest's data/-relative names by
     # '/'-anchored suffix match (unique: the rel name starts at its
     # own subdir component)
     old_rel = sorted(
-        rel
-        for rel in (os.path.relpath(f, d) for f in files)
-        if any(a.endswith("/" + rel) for a in affected)
+        rel for rel in live if any(a.endswith("/" + rel) for a in affected)
     )
 
-    lin.assert_snapshot_unused(spark, output_dir, snapshot_id)
+    lin.assert_snapshot_unused(rows, snapshot_id)
     if committed_at is None:
-        committed_at = lin.next_committed_at(spark, output_dir)
+        committed_at = lin.next_committed_at(rows)
 
     # 2. rewrite the affected files minus the victims (ONE small job
     # bounded by the affected-file bytes, not the table). The deletion

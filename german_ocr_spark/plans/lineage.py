@@ -5,7 +5,7 @@ Spark-native re-expression of the reference's async job lifecycle
 (pending/processing/completed/failed) → resume/cancel): a run is split
 into deterministic *buckets* (``pmod(xxhash64(doc_id), n_buckets)`` — an
 Iceberg ``bucket(N, doc_id)`` partition transform emulated on plain
-parquet). Each committed bucket appends a lineage row; a rerun anti-joins
+parquet). Each committed bucket appends a lineage row; a rerun skips
 committed buckets and processes only the remainder. ``JobStatus.status``
 maps to lineage ``status``; ``current_page/total_pages`` progress maps to
 committed-bucket counts.
@@ -22,6 +22,17 @@ killed job's orphan files are simply invisible, no cleanup or staging
 move needed, and the data write itself requires NO shuffle or
 partitioned layout: map tasks append files directly. ``vacuum`` deletes
 unreferenced files opportunistically.
+
+Lineage is driver-side state in BOTH directions (the Delta Lake
+log-replay model): ``append_lineage`` writes one file per commit and
+``lineage_rows`` reads the whole table once, each deciding local vs
+cluster filesystem once through ``_local_posix_path``. Everything a
+caller asks of the table — recorded bucket count, committed buckets,
+outstanding cancels, committed totals, the live file set as of a
+stamp, snapshot-id reuse, the next mutation stamp, job status — is a
+pure Python fold over those rows. A public call reads once and folds
+as often as it needs; on a local path no Spark job ever touches
+``_lineage``.
 
 Object-store safety: each commit group writes into its OWN subdirectory
 ``data/<snapshot>-g<first_bucket>/`` and its manifest is the listing of
@@ -42,7 +53,12 @@ is the supported single-writer rerun path.
 from __future__ import annotations
 
 import os
+from collections import Counter
+from typing import NamedTuple
 
+import pyarrow as pa
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -53,6 +69,40 @@ N_BUCKETS_DEFAULT = 32
 # lineage bucket_id used by job-control rows (cancel intent), which do
 # not correspond to any data bucket
 CONTROL_BUCKET = -1
+
+# statuses of the rows plans.compact / delete / upsert append; each
+# carries a file list, like a "committed" row
+MUTATION_STATUSES = ("compacted", "rewritten", "upserted", "replaced")
+
+# LINEAGE_SCHEMA field for field, as written and read driver-side, so
+# one directory mixes pyarrow-written and Spark-written files (Spark's
+# list element name "element" reads back as this list type)
+_ARROW_SCHEMA = pa.schema(
+    [
+        pa.field("snapshot_id", pa.string()),
+        pa.field("bucket_id", pa.int32()),
+        pa.field("doc_count", pa.int64()),
+        pa.field("span_count", pa.int64()),
+        pa.field("error_count", pa.int64()),
+        pa.field("status", pa.string()),
+        pa.field("committed_at", pa.string()),
+        pa.field("files", pa.list_(pa.string())),
+    ]
+)
+
+
+class LineageRow(NamedTuple):
+    """One lineage row, in LINEAGE_SCHEMA order; the unit every fold
+    below consumes."""
+
+    snapshot_id: str
+    bucket_id: int
+    doc_count: int | None
+    span_count: int | None
+    error_count: int | None
+    status: str | None
+    committed_at: str | None
+    files: list[str] | None
 
 
 def bucket_col(n_buckets: int):
@@ -115,29 +165,12 @@ def _list_data_files(spark: SparkSession, output_dir: str) -> set[str]:
 def _append_lineage_local(path: str, rows: list) -> None:
     """Driver-side manifest write: one parquet file materialized with
     pyarrow and published by an atomic rename (dot-prefixed temp names
-    are invisible to Spark's parquet reader until the rename). The
-    schema mirrors LINEAGE_SCHEMA field for field, so directories mix
-    driver-written and Spark-written files transparently."""
+    are invisible to both readers until the rename)."""
     import uuid
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    schema = pa.schema(
-        [
-            pa.field("snapshot_id", pa.string()),
-            pa.field("bucket_id", pa.int32()),
-            pa.field("doc_count", pa.int64()),
-            pa.field("span_count", pa.int64()),
-            pa.field("error_count", pa.int64()),
-            pa.field("status", pa.string()),
-            pa.field("committed_at", pa.string()),
-            pa.field("files", pa.list_(pa.string())),
-        ]
-    )
-    cols = list(zip(*rows)) if rows else [[] for _ in schema]
+    cols = list(zip(*rows)) if rows else [[] for _ in _ARROW_SCHEMA]
     table = pa.table(
-        {f.name: pa.array(c, type=f.type) for f, c in zip(schema, cols)}
+        {f.name: pa.array(c, type=f.type) for f, c in zip(_ARROW_SCHEMA, cols)}
     )
     os.makedirs(path, exist_ok=True)
     name = f"part-{uuid.uuid4().hex}.parquet"
@@ -150,11 +183,11 @@ def _local_posix_path(spark: SparkSession, path: str) -> str | None:
     """Resolve ``path`` through the session's Hadoop filesystem and
     return its posix path IFF it lands on the local FS, else None.
 
-    This is the one classifier deciding driver-side pyarrow manifest
-    writes vs cluster Spark writes, and it must agree with how Spark
-    itself resolves the same string: ``Path.getFileSystem`` applies
-    ``fs.defaultFS`` to scheme-less paths exactly as every reader
-    does. Any resolution failure returns None — the Spark write path
+    This is the one classifier deciding driver-side pyarrow lineage
+    writes and reads vs cluster Spark ones, and it must agree with how
+    Spark itself resolves the same string: ``Path.getFileSystem``
+    applies ``fs.defaultFS`` to scheme-less paths exactly as every
+    reader does. Any resolution failure returns None — the Spark path
     is always correct, just slower."""
     try:
         jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
@@ -176,21 +209,21 @@ def append_lineage(spark: SparkSession, output_dir: str, rows: list) -> None:
     Commit metadata is DRIVER-side state, so on a local/posix path the
     row is written directly with pyarrow + atomic rename — the Iceberg
     model, where manifest writes are library calls, never cluster
-    jobs. The previous spelling scheduled a one-task Spark job
-    (``coalesce(1)``) per commit: ~1-2 s of pure job-scheduling
-    latency that serialized every commit group and was the measured
-    Amdahl tail in the round-3 full-job scaling runs. Non-posix paths
-    (hdfs://, s3a://, ...) keep the Spark write, which resolves the
-    scheme through the cluster's Hadoop FS.
+    jobs. ``lineage_rows`` is the read half of the same model: one
+    driver-side pyarrow read per public call, folded in Python, so a
+    local table never costs a Spark job on either side. Non-posix
+    paths (hdfs://, s3a://, ...) keep the one-task Spark write (and
+    the one Spark ``collect()`` read), which resolve the scheme
+    through the cluster's Hadoop FS.
 
     Local-vs-cluster is decided by the RESOLVED Hadoop filesystem —
     never by string-parsing the path: a scheme-less path resolves
     through ``fs.defaultFS``, so on a cluster with
     ``defaultFS=hdfs://`` it is NOT local, and a urlparse-based check
-    would write manifests to driver-local disk while every reader
-    (read_lineage, committed_files) resolves them through HDFS —
-    commits silently invisible, resume reprocessing everything
-    (round-4 ADVICE finding)."""
+    would write manifests to driver-local disk while readers resolve
+    them through HDFS — commits silently invisible, resume
+    reprocessing everything (round-4 ADVICE finding). Writer and
+    reader share ``_local_posix_path``, so they always agree."""
     path = lineage_path(output_dir)
     local = _local_posix_path(spark, path)
     if local is not None:
@@ -221,16 +254,40 @@ def record_bucketing(
     )
 
 
-def _fresh_local_table(spark: SparkSession, output_dir: str) -> bool:
-    """True when the lineage dir resolves to the local FS and does not
-    exist: a fresh table, known without a Spark read. Spark's
-    PATH_NOT_FOUND on a missing dir would log listener stack traces;
-    non-local paths keep the read-and-catch probe."""
-    local = _local_posix_path(spark, lineage_path(output_dir))
-    return local is not None and not os.path.isdir(local)
+def read_lineage(spark: SparkSession, output_dir: str) -> DataFrame:
+    """The lineage table as a Spark DataFrame — the cluster-filesystem
+    half of ``lineage_rows``."""
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path(output_dir))
 
 
-def recorded_bucketing(spark: SparkSession, output_dir: str) -> int | None:
+def lineage_rows(spark: SparkSession, output_dir: str) -> list[LineageRow]:
+    """Every lineage row of the table, read ONCE on the driver; a
+    missing ``_lineage`` dir is a fresh table and gives ``[]``.
+
+    Same single local/cluster decision as ``append_lineage``. On a
+    local path: one ``pyarrow.dataset`` read against the Arrow mirror
+    of LINEAGE_SCHEMA — its default ``ignore_prefixes`` (``.``/``_``)
+    hides in-flight ``.part-*.tmp`` files, ``_SUCCESS`` and ``.crc``
+    files exactly as Spark's reader does, and no Spark job runs (so
+    no ``All paths were ignored`` warning and no missing-path stack
+    trace either). Elsewhere: one ``read_lineage(...).collect()``,
+    after a Hadoop-FS existence check that keeps a fresh table from
+    raising. Row order is unspecified; every fold is order-free."""
+    path = lineage_path(output_dir)
+    local = _local_posix_path(spark, path)
+    if local is not None:
+        if not os.path.isdir(local):
+            return []
+        table = pads.dataset(local, format="parquet", schema=_ARROW_SCHEMA).to_table()
+        return [LineageRow(*r) for r in zip(*(c.to_pylist() for c in table.columns))]
+    fs, jpath = _hadoop_fs(spark, path)
+    if not fs.exists(jpath):
+        return []
+    return [LineageRow(*r) for r in read_lineage(spark, output_dir).collect()]
+
+
+# ------------------------------------------------------- folds over rows
+def recorded_bucketing(rows: list[LineageRow]) -> int | None:
     """The durably recorded bucket count, or None for a fresh/legacy
     table (legacy tables adopt the next run's value).
 
@@ -241,56 +298,46 @@ def recorded_bucketing(spark: SparkSession, output_dir: str) -> int | None:
     disagree on the count: a table whose committed buckets were written
     modulo two different n_buckets is corrupt, and adopting either count
     silently duplicates or drops documents on resume."""
-    if _fresh_local_table(spark, output_dir):
+    marks = [r for r in rows if r.status == "bucketing"]
+    if not marks:
         return None
-    try:
-        ldf = read_lineage(spark, output_dir)
-    except Exception:
-        return None
-    rows = (
-        ldf.filter(F.col("status") == "bucketing")
-        .select("doc_count", "committed_at", "snapshot_id")
-        .collect()
-    )
-    if not rows:
-        return None
-    counts = {int(r.doc_count) for r in rows}
+    counts = {int(r.doc_count) for r in marks}
     if len(counts) > 1:
         raise ValueError(
             "conflicting 'bucketing' lineage rows record distinct bucket "
-            f"counts {sorted(counts)} for {output_dir!r}: concurrent first "
-            "runs raced record_bucketing; the table's committed set is "
-            "ambiguous and must be repaired manually"
+            f"counts {sorted(counts)}: concurrent first runs raced "
+            "record_bucketing; the table's committed set is ambiguous and "
+            "must be repaired manually"
         )
-    first = min(rows, key=lambda r: (r.committed_at, r.snapshot_id))
+    first = min(marks, key=lambda r: (r.committed_at, r.snapshot_id))
     return int(first.doc_count)
 
 
-def committed_buckets(spark: SparkSession, output_dir: str) -> set[int]:
-    if _fresh_local_table(spark, output_dir):
-        return set()
-    path = lineage_path(output_dir)
-    try:
-        lin = spark.read.parquet(path)
-    except Exception:
-        return set()
-    rows = (
-        lin.filter(F.col("status") == "committed")
-        .select("bucket_id")
-        .distinct()
-        .collect()
+def committed_buckets(rows: list[LineageRow]) -> set[int]:
+    return {r.bucket_id for r in rows if r.status == "committed"}
+
+
+def committed_totals(rows: list[LineageRow]) -> tuple[int, int, int]:
+    """``(doc_count, span_count, error_count)`` summed over committed
+    rows (nulls count as 0)."""
+    com = [r for r in rows if r.status == "committed"]
+    return (
+        sum(r.doc_count or 0 for r in com),
+        sum(r.span_count or 0 for r in com),
+        sum(r.error_count or 0 for r in com),
     )
-    return {r.bucket_id for r in rows}
 
 
-def read_lineage(spark: SparkSession, output_dir: str) -> DataFrame:
-    return spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path(output_dir))
+def outstanding_cancels(rows: list[LineageRow]) -> int:
+    """Cancel rows not yet matched by resume rows (see ``mark_resumed``:
+    the relationship is arithmetic, not positional)."""
+    n = Counter(r.status for r in rows)
+    return n["cancelled"] - n["resumed"]
 
 
-def committed_files(
-    spark: SparkSession, output_dir: str, as_of: str | None = None
-) -> list[str]:
-    """Union of data files referenced by committed lineage rows — the
+def live_files(rows: list[LineageRow], as_of: str | None = None) -> list[str]:
+    """Sorted data/-relative names of the files a reader sees: the
+    union of files referenced by committed lineage rows — the
     manifest-resolved view of the table (orphans invisible). Files
     referenced by ``replaced`` rows (written by ``plans.compact`` /
     ``plans.delete`` / ``plans.upsert`` in the same atomic append as
@@ -305,27 +352,26 @@ def committed_files(
     what a reader saw then (Iceberg snapshot-as-of). Valid until
     ``vacuum`` physically reclaims files the CURRENT manifest no
     longer references — vacuum is the snapshot-expiry boundary."""
-    try:
-        lin = read_lineage(spark, output_dir)
-    except Exception:
-        return []
-    if as_of is not None:
-        lin = lin.filter(F.col("committed_at") <= as_of)
-    rows = (
-        lin.filter(
-            F.col("status").isin(
-                "committed", "compacted", "rewritten", "upserted",
-                "replaced"
-            )
-        )
-        .select("status", F.explode("files").alias("f"))
-        .distinct()
-        .collect()
-    )
-    live = {r.f for r in rows if r.status != "replaced"}
-    live -= {r.f for r in rows if r.status == "replaced"}
+    live: set[str] = set()
+    shadowed: set[str] = set()
+    for r in rows:
+        if not r.files or (r.status != "committed" and r.status not in MUTATION_STATUSES):
+            continue
+        if as_of is not None and (r.committed_at is None or r.committed_at > as_of):
+            continue
+        (shadowed if r.status == "replaced" else live).update(r.files)
+    return sorted(live - shadowed)
+
+
+def committed_files(
+    spark: SparkSession, output_dir: str, as_of: str | None = None
+) -> list[str]:
+    """Full paths of ``live_files`` — the files a read of the table
+    (as of ``as_of``) scans."""
     d = data_path(output_dir)
-    return sorted(os.path.join(d, f) for f in live)
+    return [
+        os.path.join(d, f) for f in live_files(lineage_rows(spark, output_dir), as_of)
+    ]
 
 
 def vacuum(spark: SparkSession, output_dir: str) -> list[str]:
@@ -339,9 +385,7 @@ def vacuum(spark: SparkSession, output_dir: str) -> list[str]:
     expire-snapshots operational rule). Uses the Hadoop FS API, so it
     works against object stores as well as local runs."""
     d = data_path(output_dir)
-    referenced = {
-        os.path.relpath(f, d) for f in committed_files(spark, output_dir)
-    }
+    referenced = set(live_files(lineage_rows(spark, output_dir)))
     fs, _ = _hadoop_fs(spark, d)
     removed = []
     for rel in sorted(_list_data_files(spark, output_dir) - referenced):
@@ -475,12 +519,7 @@ def mark_resumed(
 
 
 # ------------------------------------------------- mutation safety rails
-MUTATION_STATUSES = ("compacted", "rewritten", "upserted", "replaced")
-
-
-def assert_snapshot_unused(
-    spark: SparkSession, output_dir: str, snapshot_id: str
-) -> None:
+def assert_snapshot_unused(rows: list[LineageRow], snapshot_id: str) -> None:
     """A mutation snapshot_id is a SINGLE-USE token: its rewrite
     subdirs are deterministic (``<snap>-c/-d/-u...``) and written with
     mode=overwrite, so re-running a mutation under an ALREADY-COMMITTED
@@ -489,25 +528,18 @@ def assert_snapshot_unused(
     write (after no-op early returns, so crash-replays that find
     nothing to do never trip it); a crashed attempt that never appended
     lineage passes and self-cleans via the overwrite."""
-    try:
-        ldf = read_lineage(spark, output_dir)
-    except Exception:
-        return
-    n = (
-        ldf.filter(
-            (F.col("snapshot_id") == snapshot_id)
-            & F.col("status").isin(*MUTATION_STATUSES)
-        ).count()
-    )
-    if n:
+    if any(
+        r.snapshot_id == snapshot_id and r.status in MUTATION_STATUSES
+        for r in rows
+    ):
         raise ValueError(
-            f"snapshot_id {snapshot_id!r} already committed a mutation in "
-            f"{output_dir!r}; mutation snapshot ids are single-use — pick a "
-            "new one (reuse would overwrite manifest-live files)"
+            f"snapshot_id {snapshot_id!r} already committed a mutation; "
+            "mutation snapshot ids are single-use — pick a new one (reuse "
+            "would overwrite manifest-live files)"
         )
 
 
-def next_committed_at(spark: SparkSession, output_dir: str) -> str:
+def next_committed_at(rows: list[LineageRow]) -> str:
     """Deterministic committed_at for a mutation when the caller did
     not supply one: the lexicographic maximum of all existing stamps
     plus a ``+m`` suffix, so the new commit sorts strictly AFTER every
@@ -515,9 +547,5 @@ def next_committed_at(spark: SparkSession, output_dir: str) -> str:
     epoch-default stamp would make the mutation retroactively visible
     to every historical as_of read). No wall clock: derived purely
     from table state, monotone under repeated application."""
-    try:
-        ldf = read_lineage(spark, output_dir)
-        cur = ldf.agg(F.max("committed_at")).collect()[0][0]
-    except Exception:
-        cur = None
+    cur = max((r.committed_at for r in rows if r.committed_at is not None), default=None)
     return f"{cur}+m" if cur else "1970-01-01T00:00:00Z+m"

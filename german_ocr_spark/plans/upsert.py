@@ -54,21 +54,38 @@ def upsert_docs(
     stamp shared by both phases, so an as_of read at that stamp sees
     the post-merge table atomically and any earlier as_of sees the
     pre-merge table."""
-    lin.assert_snapshot_unused(spark, output_dir, snapshot_id)
+    return _upsert_docs(
+        spark,
+        output_dir,
+        lin.lineage_rows(spark, output_dir),
+        fresh,
+        snapshot_id,
+        committed_at,
+    )
+
+
+def _upsert_docs(
+    spark: SparkSession,
+    output_dir: str,
+    rows: list[lin.LineageRow],
+    fresh: DataFrame,
+    snapshot_id: str,
+    committed_at: str | None,
+) -> dict:
+    """``upsert_docs`` over an already-read lineage snapshot ``rows``;
+    the delete phase folds the same snapshot (it appends nothing
+    before that phase runs)."""
+    lin.assert_snapshot_unused(rows, snapshot_id)
     if committed_at is None:
-        committed_at = lin.next_committed_at(spark, output_dir)
+        committed_at = lin.next_committed_at(rows)
     # fresh is typically the extraction pipeline's output over the
     # incoming delta — the expensive relation. It is evaluated twice
     # below (the doc_id collect AND the data write); persist around
     # both so the upstream plan runs once.
     fresh = fresh.persist()
     doc_ids = [r.doc_id for r in fresh.select("doc_id").distinct().collect()]
-    stats = dl.delete_docs(
-        spark,
-        output_dir,
-        doc_ids,
-        snapshot_id=f"{snapshot_id}-del",
-        committed_at=committed_at,
+    stats = dl._delete_docs(
+        spark, output_dir, rows, doc_ids, f"{snapshot_id}-del", committed_at
     )
     subdir = f"{snapshot_id}-u00000"
     dest = os.path.join(lin.data_path(output_dir), subdir)
@@ -77,11 +94,11 @@ def upsert_docs(
     new_files = sorted(
         f"{subdir}/{n}" for n in lin._list_dir_files(spark, dest)
     )
-    rows = [
-        (snapshot_id, lin.CONTROL_BUCKET, 0, 0, 0, "upserted",
-         committed_at, new_files),
-    ]
-    lin.append_lineage(spark, output_dir, rows)
+    lin.append_lineage(
+        spark,
+        output_dir,
+        [(snapshot_id, lin.CONTROL_BUCKET, 0, 0, 0, "upserted", committed_at, new_files)],
+    )
     return {
         "docs_upserted": len(doc_ids),
         "rows_deleted": stats["rows_deleted"],

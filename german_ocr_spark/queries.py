@@ -20562,9 +20562,7 @@ def q237(spark, sf_dir):
 # < 2^16, squared-sample sums < 2^38 — both far under 2^53), so the
 # doubles match bitwise under the validator's check_exact gate.
 
-_Q238_PLANT_DDL = (
-    "doc_id string, media_ref string, media_type string, content binary"
-)
+_Q238_PLANT_DDL = "doc_id string, media_ref string, content binary"
 
 
 def _q238_plant(batches):
@@ -20585,9 +20583,7 @@ def _q238_plant(batches):
     )
 
     for pdf in batches:
-        rows: dict[str, list] = {
-            "doc_id": [], "media_ref": [], "media_type": [], "content": []
-        }
+        rows: dict[str, list] = {"doc_id": [], "media_ref": [], "content": []}
         for k in pdf["k"]:
             k = int(k)
             if k % 3 == 0:
@@ -20596,7 +20592,6 @@ def _q238_plant(batches):
                     (np.arange(w * h, dtype=np.int64) * 31 + 17 * k) % 256
                 ).astype(np.uint8)
                 buf = encode_fake_image(w, h, pixels=px)
-                mt = "image"
             elif k % 3 == 1:
                 rate, n = 8000 + 1000 * (k % 5), 50 + k % 100
                 s = (
@@ -20604,7 +20599,6 @@ def _q238_plant(batches):
                     - 32768
                 ).astype(np.int16)
                 buf = encode_fake_audio(rate, n, samples=s)
-                mt = "audio"
             else:
                 nf, w, h = 1 + k % 6, 2 + k % 5, 2 + k % 3
                 px = (
@@ -20612,10 +20606,8 @@ def _q238_plant(batches):
                     % 256
                 ).astype(np.uint8)
                 buf = encode_fake_video(nf, w, h, pixels=px)
-                mt = "video"
             rows["doc_id"].append(str(k))
             rows["media_ref"].append(f"mem://{k}")
-            rows["media_type"].append(mt)
             rows["content"].append(buf)
         yield pd.DataFrame(rows)
 

@@ -488,27 +488,18 @@ def stream_upsert(
     the delete step rewrites only files containing refreshed docs, the
     append touches nothing else."""
     from ..plans import lineage as lin
-    from ..plans.upsert import upsert_docs
+    from ..plans.upsert import _upsert_docs
 
     docs = spark.readStream.schema(DOCUMENTS_SPANS_SCHEMA).parquet(input_dir)
     extracted = extract_pipeline(docs)
 
-    def _batch_already_committed(sess, snapshot_id: str) -> bool:
-        try:
-            ldf = lin.read_lineage(sess, table_dir)
-        except Exception:
-            return False
-        return bool(
-            ldf.filter(
-                (F.col("snapshot_id") == snapshot_id)
-                & (F.col("status") == "upserted")
-            ).count()
-        )
-
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         snapshot_id = f"stream-b{batch_id:06d}"
         sess = batch_df.sparkSession
-        if _batch_already_committed(sess, snapshot_id):
+        # one lineage read per batch: the replay check and the merge
+        # fold the same snapshot
+        rows = lin.lineage_rows(sess, table_dir)
+        if any(r.snapshot_id == snapshot_id and r.status == "upserted" for r in rows):
             return  # checkpoint-replay of a fully-committed batch
         # one evaluation of the batch pipeline for the emptiness check,
         # the doc_id projection inside upsert_docs, AND the write
@@ -518,7 +509,7 @@ def stream_upsert(
                 return
             # committed_at: default derives the next monotone stamp
             # from the table itself (lin.next_committed_at via
-            # upsert_docs), so stream commits slot AFTER all existing
+            # _upsert_docs), so stream commits slot AFTER all existing
             # commits and as_of time travel at real timestamps still
             # sees them; an explicit base gets the batch id appended
             # (monotone, string-compared).
@@ -527,13 +518,7 @@ def stream_upsert(
                 if committed_at_base is not None
                 else None
             )
-            upsert_docs(
-                sess,
-                table_dir,
-                batch_df,
-                snapshot_id=snapshot_id,
-                committed_at=stamp,
-            )
+            _upsert_docs(sess, table_dir, rows, batch_df, snapshot_id, stamp)
         finally:
             batch_df.unpersist()
 

@@ -33,6 +33,34 @@ def test_extract_kernel_codes():
     assert ((out["error"].isna()) == (out["error_code"].isna())).all()
 
 
+def test_bad_int_fields_are_parse_error_rows():
+    """An int field (page, node_id, block_id) that is infinite, fractional
+    or outside int64 makes its span a PARSE_* row instead of failing the
+    whole batch; good spans of the same batch are unaffected."""
+    us = "\x1f"
+    bad = ["inf", "-inf", "1.5", "99999999999999999999"]
+    pdf_spans = [us.join([v, "1", "2", "3", "4", "a"]) for v in bad]
+    html_spans = [us.join(["0", "p", v, "b"]) for v in bad]
+    texts = pdf_spans + html_spans + [us.join(["1.0", "1", "2", "3", "4", "ok"])]
+    n = len(texts)
+    out = extract_pandas(
+        pd.DataFrame(
+            {
+                "doc_id": [f"d{i}" for i in range(n)],
+                "order": [0] * n,
+                "kind": ["pdf"] * len(bad) + ["html"] * len(bad) + ["pdf"],
+                "text": texts,
+                "media_ref": [""] * n,
+            }
+        )
+    )
+    codes = dict(zip(out["doc_id"], out["error_code"]))
+    assert [codes[f"d{i}"] for i in range(n)] == (
+        ["PARSE_PDF"] * len(bad) + ["PARSE_HTML"] * len(bad) + [None]
+    )
+    assert out.loc[out["doc_id"] == f"d{n - 1}", "text"].tolist() == ["ok"]
+
+
 def test_multimodal_codes(spark):
     rows = [
         ("m1", "ref1", bytes(encode_fake_image(4, 4, seed=1))),  # ok

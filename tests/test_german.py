@@ -70,16 +70,12 @@ def _corruption_soup(n=3000, seed=1234):
 
 
 @pytest.mark.parametrize("kernel_name", [
-    "normalize_series",            # the dispatching default (Arrow here)
+    "normalize_series",            # the public kernel
     "_normalize_series_arrow",     # RE2 fast path, pinned explicitly
-    "_normalize_series_sequential",  # pyarrow-less fallback
 ])
 def test_every_kernel_path_equals_rule_chain_brute_force(kernel_name):
     """EVERY normalize kernel path must equal the literal rule chain
-    (normalize_text) on dense random corruption soup — including the
-    fallback that normal runs never dispatch to (a fused fallback once
-    silently diverged exactly because only the default path was
-    exercised)."""
+    (normalize_text) on dense random corruption soup."""
     from german_ocr_spark.functions import german as g
 
     kernel = getattr(g, kernel_name)

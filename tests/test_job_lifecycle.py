@@ -122,7 +122,7 @@ def test_cancelled_partial_output_invisible_and_resumable(spark, docs, tmp_path)
         )
     assert cancelled.is_set()
 
-    committed = lin.committed_buckets(spark, out)
+    committed = lin.committed_buckets(lin.lineage_rows(spark, out))
     assert len(committed) == 1  # exactly the group that beat the cancel
 
     # read_output sees exactly the committed buckets' docs (manifest

@@ -99,6 +99,25 @@ def test_fake_codecs_roundtrip():
     assert encode_fake_video(2, 4, 4, seed=1) == encode_fake_video(2, 4, 4, seed=1)
 
 
+def test_fake_codecs_reject_payloads_that_disagree_with_the_header():
+    """An explicit payload must be exactly the values the header
+    announces; a wrong length or dtype fails when the buffer is planted,
+    not later as a garbled decode."""
+    ok = np.zeros(12, dtype=np.uint8)
+    assert len(encode_fake_image(4, 3, pixels=ok)) == 12 + 12
+    bad = {
+        "FIMG short": lambda: encode_fake_image(4, 3, pixels=ok[:11]),
+        "FIMG dtype": lambda: encode_fake_image(4, 3, pixels=ok.astype(np.int64)),
+        "FAUD long": lambda: encode_fake_audio(8000, 5, samples=np.zeros(6, np.int16)),
+        "FAUD dtype": lambda: encode_fake_audio(8000, 5, samples=np.zeros(5, np.uint8)),
+        "FVID short": lambda: encode_fake_video(2, 2, 3, pixels=ok[:11]),
+        "FVID dtype": lambda: encode_fake_video(2, 2, 3, pixels=ok.astype(np.int16)),
+    }
+    for name, plant in bad.items():
+        with pytest.raises(ValueError, match=name.split()[0] + " payload must be"):
+            plant()
+
+
 def test_q110_ahash_finds_exactly_the_planted_variants(spark):
     """Every planted (base, variant) pair is detected within the
     hamming budget, no unplanted pair sneaks in, and the truncated

@@ -53,7 +53,7 @@ def test_resume_after_partial_commit(spark, docs, tmp_path):
         spark, sdf, out, n_buckets=8, bucket_group_size=3, max_groups=1
     )
     assert partial.buckets_processed == 3
-    assert len(lin.committed_buckets(spark, out)) == 3
+    assert len(lin.committed_buckets(lin.lineage_rows(spark, out))) == 3
 
     resumed = pipeline.run(spark, sdf, out, n_buckets=8, bucket_group_size=3)
     assert resumed.buckets_skipped == 3
@@ -130,7 +130,7 @@ def test_resume_with_different_n_buckets_refuses(spark, docs, tmp_path):
     pipeline.run(
         spark, sdf, out, n_buckets=8, bucket_group_size=3, max_groups=1
     )
-    assert lin.recorded_bucketing(spark, out) == 8
+    assert lin.recorded_bucketing(lin.lineage_rows(spark, out)) == 8
     with pytest.raises(ValueError, match="n_buckets=8"):
         pipeline.run(spark, sdf, out, n_buckets=32)
     # the matching count still resumes fine
@@ -208,10 +208,10 @@ def test_conflicting_bucketing_rows_raise(spark, docs, tmp_path):
     out = str(tmp_path / "out")
     lin.record_bucketing(spark, out, 8, "run-a", "2026-01-01T00:00:00Z")
     lin.record_bucketing(spark, out, 8, "run-b", "2026-01-02T00:00:00Z")
-    assert lin.recorded_bucketing(spark, out) == 8  # agreeing twins OK
+    assert lin.recorded_bucketing(lin.lineage_rows(spark, out)) == 8  # agreeing twins OK
     lin.record_bucketing(spark, out, 32, "run-c", "2026-01-03T00:00:00Z")
     with pytest.raises(ValueError, match="conflicting 'bucketing'"):
-        lin.recorded_bucketing(spark, out)
+        lin.recorded_bucketing(lin.lineage_rows(spark, out))
     with pytest.raises(ValueError, match="conflicting 'bucketing'"):
         pipeline.run(spark, docs_to_spark(spark, docs), out, n_buckets=8)
 

@@ -3,7 +3,8 @@ efficiency >= 0.8 from N to 4N executors).
 
 No real cluster exists in this sandbox, so "N vs 4N executors" is stood
 in for by the same job on the same on-disk input at two parallelism
-levels (default 8 vs 32 cores), with the process tree CPU-PINNED to
+levels (default 1 vs all cores this process may run on), with the
+process tree CPU-PINNED to
 exactly N cores via sched_setaffinity. Pinning matters: in local[N]
 mode the Python UDF workers are separate processes NOT bounded by N, so
 an unpinned local[8] on a 32-core box quietly uses ~16 cores and
@@ -24,7 +25,10 @@ cluster-size-invariance half of the north rule.
 
 Results land in BENCH_SCALING.md. Usage:
 
-    python tools/scaling_bench.py [--docs 200000] [--cores 8,32]
+    python tools/scaling_bench.py [--docs 200000] [--pairs 1:4,2:8]
+
+``--pairs`` defaults to ``1:N`` with N = ``len(os.sched_getaffinity(0))``,
+so the widest level never asks for more threads than the box has cores.
 
 Internal modes (spawned as subprocesses so each run gets its own JVM):
     --prepare <n_docs> <seed> <path>
@@ -172,7 +176,7 @@ def main() -> int:
         return 0
 
     n_docs = 200000
-    pairs = [(8, 32), (4, 16)]
+    pairs = [(1, len(os.sched_getaffinity(0)))]
     if "--docs" in args:
         n_docs = int(args[args.index("--docs") + 1])
     if "--pairs" in args:
@@ -269,6 +273,7 @@ def write_report(s: dict, levels: list[int]) -> None:
         f"| {p['full_job_scaling_efficiency']} |"
         for p in s["pairs"]
     )
+    pairs_arg = ",".join(p["pair"].replace("->", ":") for p in s["pairs"])
     with open(path, "w") as f:
         f.write(
             f"""# BENCH_SCALING — two-cluster-size scaling evidence
@@ -287,7 +292,7 @@ lazily-backed VM memory injects multi-second first-touch page-fault
 stalls (measured ~0.1-0.5 GB/s fresh-touch vs ~20 GB/s resident) that
 a real cluster host does not exhibit; the stall tax grows with the
 number of concurrently-allocating processes, so it biases AGAINST the
-wider level (see the 4->16 vs 8->32 comparison below).
+wider level.
 
 Job (extract): parquet scan -> in-row span sort + posexplode ->
 mapInPandas kernels (HTML boilerplate / XY-cut PDF / German OCR
@@ -311,14 +316,11 @@ and manifest lineage commit (min of 2 runs).
 - output bitwise-identical across ALL parallelism levels: **{s['output_bitwise_identical']}**
   ({s['output_rows']} span rows, order-insensitive md5 over
   (doc_id, order, kind, text, media_ref, error, error_code))
-- The 8->32 pair is additionally depressed by the sandbox artifact
-  above: at 32 cores the 32 JVM task threads + 32 Python workers are
-  the highest concurrent-allocation pressure this box can generate,
-  and the first-touch stall tax scales with that pressure. The 4->16
-  pair measures the same code at the same 4x ratio below the
-  pressure threshold.
+- Wider levels are additionally depressed by the sandbox artifact
+  above: N JVM task threads + N Python workers allocate concurrently,
+  and the first-touch stall tax scales with that pressure.
 
-Reproduce: `python tools/scaling_bench.py --docs {s['n_docs']} --pairs 8:32,4:16`
+Reproduce: `python tools/scaling_bench.py --docs {s['n_docs']} --pairs {pairs_arg}`
 """
         )
 
